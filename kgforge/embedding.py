@@ -28,6 +28,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, FloatType
 
+from kgforge.session import one_wave
+
 DIM = 64
 MODEL_NAME = "feature-hash-64"
 
@@ -82,7 +84,9 @@ def backfill_chunk_embeddings(store) -> int:
     chunks = store.read("chunks")
     if chunks is None:
         return 0
-    todo = unembedded_chunks(chunks, store.read("embeddings"))
+    # the store reads chunks as about one partition per bucket file
+    # (32 by default): embed them on one task wave instead
+    todo = one_wave(unembedded_chunks(chunks, store.read("embeddings")))
     rows = todo.select(
         F.col("chunk_id").alias("id"),
         F.lit("chunk").alias("kind"),

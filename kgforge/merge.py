@@ -50,6 +50,7 @@ from pyspark.sql.types import ArrayType, StringType
 
 from kgforge import tokenizer
 from kgforge.schemas import SEP
+from kgforge.session import one_wave
 
 DEFAULT_MAX_SUMMARY_TOKENS = 1200  # default.go:44
 
@@ -559,6 +560,8 @@ def apply_description_summary(
     Token counting + summarization run in one Arrow-batched pandas UDF
     over the already-aggregated rows (one row per entity/edge — tiny
     relative to mentions).  Rows under the limit keep their arrays.
+    The UDF runs on one task wave (session.one_wave), not on the
+    reduce's shuffle partitions.
 
     COUPLING (ADVICE r4): if ``df`` came from an ``aggregate_*`` call
     with a ``max_list_values`` cap, ``max_tokens`` must satisfy
@@ -582,7 +585,7 @@ def apply_description_summary(
                 out.append([summarize(name, ds)])
         return pd.Series(out, dtype=object)
 
-    return df.withColumn(
+    return one_wave(df).withColumn(
         "descriptions", summarize_udf(F.col(name_col), F.col("descriptions"))
     )
 

@@ -14,8 +14,19 @@ Spark plan (one narrow stage + two keyed shuffles + MERGE writes):
     -> explode mentions + canonicalize            [narrow]
     -> entity reduce  groupBy(entity_id)          [shuffle, 2-level]
     -> edge reduce    groupBy(src, dst)           [shuffle, 2-level]
-    -> placeholder anti-join, summaries           [small]
+    -> summary pandas UDF                         [coalesce: one wave]
+    -> placeholder anti-join                      [small]
+    -> embedding pandas UDF                       [coalesce: one wave]
     -> MERGE nodes / edges / embeddings / checkpoint
+
+The summary and embedding UDFs run on one task wave
+(defaultParallelism tasks, through session.one_wave).  Each Python
+task pays a fixed ~0.2 s worker charge (see one_wave); on the merge's
+shuffle partitions the two UDFs cost ~150 tasks per ingest for under
+a second of Python work.  coalesce is narrow, so the last reduce
+before each UDF shares its wave; earlier shuffles keep their width.
+The chunker stays on its input splits: its work grows with the
+corpus, and documents_as_repos spreads an under-split source.
 
 Scale notes (100 TB / 10^12 files): the expensive work (chunk +
 extract) is embarrassingly parallel and partition-pruned by
@@ -40,6 +51,7 @@ from kgforge.canonicalize import HEURISTIC_ENTITY_TYPES, explode_mentions
 from kgforge.chunking import clean_content, doc_id_col
 from kgforge.embedding import MODEL_NAME, embed_udf
 from kgforge.schemas import SEP
+from kgforge.session import one_wave
 from kgforge.store import ParquetTableStore
 
 
@@ -323,7 +335,7 @@ def embedding_rows(nodes: DataFrame, edges: DataFrame) -> DataFrame:
         F.col("dst"),
     )
     return (
-        ent.unionByName(rel)
+        one_wave(ent.unionByName(rel))
         .withColumn("vector", embed_udf(F.col("text")))
         .withColumn("model", F.lit(MODEL_NAME))
         .withColumn("created_at", F.lit(None).cast("timestamp"))

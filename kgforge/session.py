@@ -9,14 +9,23 @@ spark-submit jobs share one tuned configuration:
   (chunkers / extractor / embedder) stream Arrow batches instead of
   per-row Python (input_hint: "no per-row Python");
 - shuffle partitions sized for the local harness but overridable for
-  a real cluster via env/conf.
+  a real cluster via env/conf;
+- Python UDF stages on one task wave (:func:`one_wave`): each Python
+  task pays a fixed worker charge, so those stages run on
+  ``defaultParallelism`` partitions instead of the shuffle width.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+
+def _host_heap() -> str:
+    """Half of the host's physical memory, at most 48g."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(48, phys // 2 // 2**30))}g"
 
 
 def build_session(
@@ -70,10 +79,13 @@ def build_session(
         # local mode: the driver JVM hosts all executor threads, so the
         # heap must cover per-task execution memory x cores — an 8g
         # heap makes 32 concurrent aggregate tasks spill and inverts
-        # scaling. Size generously for the 128 GiB harness box.
+        # scaling.  But a heap larger than the host lets G1 grow the
+        # JVM until the OS kills it instead of Spark spilling: on a
+        # 15 GB host a 48g heap took the test suite's JVM to 14.5 GB
+        # RSS and an OOM kill.  Half of physical memory, up to 48g.
         .config(
             "spark.driver.memory",
-            os.environ.get("KGFORGE_DRIVER_MEM", "48g"),
+            os.environ.get("KGFORGE_DRIVER_MEM", _host_heap()),
         )
         .config("spark.memory.fraction", "0.7")
         # Spark renders the physical-plan STRING for the SQL listener
@@ -96,3 +108,29 @@ def build_session(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def one_wave(df: DataFrame) -> DataFrame:
+    """``df`` on at most ``defaultParallelism`` partitions: one task
+    wave.  Apply it to the input of a Python UDF stage.
+
+    Every Python task pays a fixed charge before it touches a row, and
+    an empty partition pays it too.  pyspark's worker calls
+    ``setup_spark_files`` per task, which calls
+    ``importlib.invalidate_caches()``.  On CPython 3.11 that re-reads
+    the zip directory of every ``zipimporter`` in
+    ``sys.path_importer_cache`` -- 16 in a worker, over ``pyspark.zip``
+    (1,328 entries) and the ``spark-core`` jar (5,359 entries).  Timed
+    inside a worker on a 4-core x86 host with pyspark 4.1.2, the call
+    took 0.2 s, and every task burned 0.21-0.28 s of worker CPU: an
+    identity ``pandas_udf`` over 96 partitions took 6-7 s, a JVM-only
+    job over the same partitions 0.4 s.  A UDF over the 32 shuffle
+    partitions of a small reduce pays it 32 times for work that one
+    wave does.
+
+    ``coalesce`` is narrow (no shuffle), and it is the Python stage,
+    not ``spark.sql.shuffle.partitions``, that is narrowed: lowering
+    that conf would re-plan every JVM operator for a charge only Python
+    tasks pay.  ``python tools/probe_hw.py python_tasks`` re-measures
+    the charge on a new host or interpreter."""
+    return df.coalesce(df.sparkSession.sparkContext.defaultParallelism)

@@ -33,7 +33,8 @@ matter at 10^12-row scale on plain parquet:
    with null back-fill; untouched old-generation files are read
    through the evolved schema (missing columns -> null) without a
    footer-merge pass.  A type CHANGE on an existing column raises
-   loudly instead of silently corrupting.
+   loudly instead of silently corrupting; nullability is not a type
+   (Spark infers it per plan), so it only widens the recorded schema.
 
 Single-writer invariant: concurrent upserts to the same store are not
 coordinated (the reference's storage layer has the same contract —
@@ -52,12 +53,50 @@ from typing import Dict, List, Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    MapType,
+    StructField,
+    StructType,
+)
 
 BUCKET_COL = "_bucket"
 DEFAULT_N_BUCKETS = 32
 MANIFEST_DIR = "_manifest"
 CURRENT = "CURRENT"
+
+
+def _widen(old: DataType, new: DataType) -> Optional[DataType]:
+    """``new`` with each nullable / containsNull / valueContainsNull
+    flag OR-ed with ``old``'s, recursively through array, map and
+    struct types; None when the types differ in anything else."""
+    if isinstance(old, ArrayType) and isinstance(new, ArrayType):
+        elem = _widen(old.elementType, new.elementType)
+        if elem is None:
+            return None
+        return ArrayType(elem, old.containsNull or new.containsNull)
+    if isinstance(old, MapType) and isinstance(new, MapType):
+        key = _widen(old.keyType, new.keyType)
+        value = _widen(old.valueType, new.valueType)
+        if key is None or value is None:
+            return None
+        return MapType(
+            key, value, old.valueContainsNull or new.valueContainsNull
+        )
+    if isinstance(old, StructType) and isinstance(new, StructType):
+        if old.names != new.names:
+            return None
+        fields = []
+        for fo, fn in zip(old.fields, new.fields):
+            t = _widen(fo.dataType, fn.dataType)
+            if t is None:
+                return None
+            fields.append(
+                StructField(fn.name, t, fo.nullable or fn.nullable)
+            )
+        return StructType(fields)
+    return new if old == new else None
 
 
 @dataclass
@@ -281,14 +320,7 @@ class ParquetTableStore:
                 "(keyed MERGE) instead of raw append"
             )
         old_schema = self._schema_of(old) if old else None
-        self._check_evolution(old_schema, df.schema, name)
-        merged_schema = df.schema
-        if old_schema is not None:
-            have = {f.name for f in df.schema.fields}
-            merged_schema = StructType(
-                list(df.schema.fields)
-                + [f for f in old_schema.fields if f.name not in have]
-            )
+        merged_schema = self._check_evolution(old_schema, df.schema, name)
         gen = uuid.uuid4().hex[:8]
         tdir = self._path(name)
         os.makedirs(tdir, exist_ok=True)
@@ -325,19 +357,32 @@ class ParquetTableStore:
 
     def _check_evolution(
         self, old: Optional[StructType], new: StructType, name: str
-    ) -> None:
+    ) -> StructType:
         """Adding columns is fine (null back-fill); changing an
-        existing column's type is a loud error, never silent."""
+        existing column's type is a loud error, never silent.
+        Nullability is ignored: Spark infers it per plan, so two
+        batches of one table can differ only there.
+
+        Returns the schema to record: ``new`` widened by ``old``'s
+        nullability, then ``old``'s columns that ``new`` lacks."""
         if old is None:
-            return
-        old_types = {f.name: f.dataType for f in old.fields}
+            return new
+        old_fields = {f.name: f for f in old.fields}
+        fields = []
         for f in new.fields:
-            if f.name in old_types and old_types[f.name] != f.dataType:
+            fo = old_fields.get(f.name, f)
+            t = _widen(fo.dataType, f.dataType)
+            if t is None:
                 raise ValueError(
                     f"schema evolution conflict on table '{name}' "
-                    f"column '{f.name}': {old_types[f.name]} -> "
+                    f"column '{f.name}': {fo.dataType} -> "
                     f"{f.dataType}"
                 )
+            fields.append(StructField(f.name, t, fo.nullable or f.nullable))
+        have = set(new.names)
+        return StructType(
+            fields + [f for f in old.fields if f.name not in have]
+        )
 
     def _adopt_buckets(
         self, name: str, tmp: str, gen: str
@@ -492,7 +537,9 @@ class ParquetTableStore:
                 # — new rows always land in their bucket — but never
                 # leave stale rows live)
                 replaced.append(buckets.pop(key))
-        schema_json = merged.drop(BUCKET_COL).schema.json()
+        schema_json = self._check_evolution(
+            old_schema, merged.drop(BUCKET_COL).schema, name
+        ).json()
         return StagedWrite(
             name=name,
             entry={

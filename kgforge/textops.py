@@ -1526,6 +1526,8 @@ def repetition_stats(
             )
 
         def finish(acc):
+            # the whole result struct comes out of the fold: selecting
+            # fields of the fold outside it would run it once per field
             return F.struct(
                 F.greatest(acc["mx"], acc["run"]).alias("mx"),
                 (
@@ -1534,21 +1536,13 @@ def repetition_stats(
                         F.lit(0)
                     )
                 ).alias("dup"),
+                (n - (k - 1)).cast("long").alias("tot"),
             )
 
-        folded = F.aggregate(arr, init, merge, finish)
-        tot = (n - (k - 1)).cast("long")
         # NULL struct for docs too short for this gram order — the
         # final coalesce turns it into the zero row the left-join
         # form produced
-        return F.when(
-            n >= k,
-            F.struct(
-                folded["mx"].alias("mx"),
-                folded["dup"].alias("dup"),
-                tot.alias("tot"),
-            ),
-        )
+        return F.when(n >= k, F.aggregate(arr, init, merge, finish))
 
     bound = base.select(
         "doc",

@@ -326,3 +326,53 @@ def test_lang_partitioned_corpus_scan_prunes(spark, tmp_path):
     assert re.search(r"PartitionFilters: \[[^\]]*lang", plan), plan
     got = chunks.select("lang").distinct().collect()
     assert [r.lang for r in got] == ["go"]
+
+
+def test_python_udf_stages_run_on_one_wave(spark):
+    """Every Python task pays a fixed worker charge, so the summary
+    and embedding UDFs run on at most defaultParallelism partitions
+    (session.one_wave), however wide the merged frames arrive.  The
+    UDF projection is narrow: its output has its input's partitions."""
+    from kgforge import merge as mrg
+    from kgforge.corpus import synthesize_corpus
+    from kgforge.pipeline import embedding_rows, extract_mentions
+
+    cfg = PipelineConfig()
+    wave = spark.sparkContext.defaultParallelism
+    _, _, ents, rels = extract_mentions(
+        synthesize_corpus(spark, n_files=100), cfg
+    )
+    # a wide reduce output, as a large corpus gives (an explicit
+    # repartition is not coalesced by AQE)
+    nodes = mrg.aggregate_entities(ents, None, now=cfg.now).repartition(
+        4 * wave
+    )
+    edges = mrg.aggregate_relationships(
+        rels, None, now=cfg.now
+    ).repartition(4 * wave)
+    summarized_nodes = mrg.apply_description_summary(nodes, "entity_id")
+    summarized_edges = mrg.apply_description_summary(edges, "src")
+    assert summarized_nodes.rdd.getNumPartitions() <= wave
+    assert summarized_edges.rdd.getNumPartitions() <= wave
+    emb = embedding_rows(nodes, edges)
+    assert emb.rdd.getNumPartitions() <= wave
+    assert emb.count() == nodes.count() + edges.count()
+
+
+def test_stored_embeddings_bit_identical_to_embed_text(spark, store):
+    """Moving the embedding UDF onto fewer partitions must not change
+    a single stored float: every row's vector has the float32 bit
+    pattern of embed_text(text)."""
+    import numpy as np
+
+    from kgforge.corpus import synthesize_corpus
+    from kgforge.embedding import embed_text
+
+    run_insert(spark, synthesize_corpus(spark, n_files=40), store,
+               PipelineConfig())
+    rows = store.read("embeddings").select("text", "vector").collect()
+    assert len(rows) > 100
+    for r in rows:
+        got = np.asarray(r.vector, dtype=np.float32).view(np.uint32)
+        want = np.asarray(embed_text(r.text), dtype=np.float32)
+        assert np.array_equal(got, want.view(np.uint32)), r.text

@@ -249,6 +249,90 @@ def test_schema_evolution_add_column_backfills_nulls(spark, tmp_path):
         )
 
 
+def test_check_evolution_ignores_nullability_only(spark, tmp_path):
+    """Two batches of one table may differ only in nullability (Spark
+    infers it per plan): that passes, and the recorded schema is the
+    widened, nullable one.  A real type change, also one nested in an
+    array, map or struct, still raises."""
+    from pyspark.sql.types import (
+        ArrayType, LongType, MapType, StringType, StructField, StructType,
+    )
+
+    store = ParquetTableStore(spark, str(tmp_path / "t"), n_buckets=4)
+
+    def schema(elem, contains_null, nullable, value=StringType()):
+        return StructType([
+            StructField("id", StringType(), nullable),
+            StructField("ids", ArrayType(elem, contains_null), True),
+            StructField(
+                "m", MapType(StringType(), value, contains_null), True
+            ),
+            StructField("s", StructType([
+                StructField("x", ArrayType(elem, contains_null), nullable)
+            ]), True),
+        ])
+
+    old = schema(StringType(), True, True)
+    new = schema(StringType(), False, False)
+    assert store._check_evolution(old, new, "edges") == old
+    assert store._check_evolution(new, old, "edges") == old
+    # added and dropped columns carry through next to the widening
+    added = StructType(new.fields + [StructField("w", LongType(), True)])
+    got = store._check_evolution(old, added, "edges")
+    assert got == StructType(old.fields + [added["w"]])
+    assert store._check_evolution(added, new, "edges") == StructType(
+        new.fields + [added["w"]]
+    )
+
+    for bad in (
+        schema(LongType(), True, True),
+        schema(StringType(), True, True, value=LongType()),
+    ):
+        with pytest.raises(ValueError, match="schema evolution conflict"):
+            store._check_evolution(old, bad, "edges")
+    renamed = StructType(old.fields[:3] + [StructField(
+        "s", StructType([StructField("y", ArrayType(StringType()))])
+    )])
+    with pytest.raises(ValueError, match="column 's'"):
+        store._check_evolution(old, renamed, "edges")
+
+
+def test_chained_deltas_on_one_store(spark, tmp_path):
+    """A full ingest, then two different deltas onto the same store:
+    each delta's merge reads existing rows back, so its batches differ
+    from the stored schema in nullability, which must not count as a
+    schema change."""
+    store = ParquetTableStore(spark, str(tmp_path / "t"), n_buckets=4)
+    cfg = PipelineConfig()
+    docs = _mk_docs(spark, range(6))
+
+    def edit(df, path, text):
+        return df.withColumn(
+            "content",
+            F.when(F.col("path") == path, F.lit(text)).otherwise(
+                F.col("content")
+            ),
+        )
+
+    run_insert(spark, docs, store, cfg)
+    delta1 = edit(docs, "f0.txt",
+                  "document zero now talks about spark streams twice")
+    m1 = run_insert(spark, delta1, store, cfg)
+    assert m1["docs_processed"] == 1
+    delta2 = edit(delta1, "f1.txt",
+                  "document one talks about spark tables and caches")
+    delta2 = delta2.unionByName(_mk_docs(spark, [6]))
+    m2 = run_insert(spark, delta2, store, cfg)
+    assert (m2["docs_processed"], m2["docs_skipped"]) == (2, 5)
+    assert store.read("checkpoint").count() == 7
+    edges = store.read("edges")
+    nodes = {r.entity_id for r in store.read("nodes").collect()}
+    for r in edges.select("src", "dst").collect():
+        assert r.src in nodes and r.dst in nodes
+    # a third run of the same input is a no-op
+    assert run_insert(spark, delta2, store, cfg)["docs_processed"] == 0
+
+
 def test_exists_recognizes_partitioned_plain_tables(spark, tmp_path):
     """round-2 ADVICE item 3: overwrite(partition_by=...) tables must
     be visible to exists()/read() so a later upsert migrates instead
